@@ -82,18 +82,12 @@ def quality_score_expr(text_col):
 
     The standard pretraining-corpus heuristic shape (length + fluency +
     punctuation sanity); weights are fixed so the score is reproducible.
-
-    NOTE this form re-derives the word array per term (3 splits per
-    evaluation) and, referenced under a filter, gets INLINED per
-    reference by predicate pushdown (the web_gate_expr finding). Query
-    paths that filter on the score or combine it with other word-array
-    metrics should use ``quality_score_from`` over a staged array —
-    same expression tree, same rounded values.
+    Referenced under a filter, this gets INLINED per reference by
+    predicate pushdown (the web_gate_expr finding); query paths that
+    filter on the score or combine it with other word-array metrics
+    bind the array once and call ``quality_score_from``.
     """
-    length_term = F.least(token_count_expr(text_col) / F.lit(100.0), F.lit(1.0))
-    punct_term = F.lit(1.0) - punct_ratio_expr(text_col)
-    stop_term = F.least(stopword_ratio_expr(text_col) * 5.0, F.lit(1.0))
-    return round_det(0.4 * length_term + 0.3 * punct_term + 0.3 * stop_term, 4)
+    return quality_score_from(text_col, words_expr(text_col))
 
 
 def quality_score_from(txt, ws):
@@ -102,15 +96,10 @@ def quality_score_from(txt, ws):
     when ``ws`` is a lambda variable over ``array(words_expr(txt))``,
     predicate pushdown cannot re-inline the split per reference, so
     the tokenization runs once per row no matter where the optimizer
-    moves the predicate. Identical arithmetic to quality_score_expr
-    (the same sub-expressions over the same values), so the 4-decimal
-    rounded score is bit-identical."""
+    moves the predicate."""
     n_tok = F.size(ws)
     length_term = F.least(n_tok / F.lit(100.0), F.lit(1.0))
-    n_punct = F.length(F.regexp_replace(txt, PUNCT_CLASS, ""))
-    punct_term = F.lit(1.0) - n_punct / F.greatest(
-        F.length(txt), F.lit(1)
-    ).cast("double")
+    punct_term = F.lit(1.0) - punct_ratio_expr(txt)
     stop_hits = F.size(F.filter(ws, lambda w: w.isin(*EN_STOPWORDS)))
     stop_ratio = stop_hits / F.greatest(n_tok, F.lit(1)).cast("double")
     stop_term = F.least(stop_ratio * 5.0, F.lit(1.0))
@@ -119,8 +108,7 @@ def quality_score_from(txt, ws):
 
 def lang_id_from(ws):
     """``lang_id_expr`` reading an already-built word array (same
-    bound-variable contract as ``quality_score_from``). Identical
-    hit counts and tie order."""
+    bound-variable contract as ``quality_score_from``)."""
     en = F.size(F.filter(ws, lambda w: w.isin(*EN_STOPWORDS)))
     es = F.size(F.filter(ws, lambda w: w.isin(*ES_STOPWORDS)))
     de = F.size(F.filter(ws, lambda w: w.isin(*DE_STOPWORDS)))
@@ -172,15 +160,7 @@ def lang_id_expr(text_col):
 
     Deterministic argmax with fixed tie order (en > es > de > unknown).
     """
-    en = _stop_hits(text_col, EN_STOPWORDS)
-    es = _stop_hits(text_col, ES_STOPWORDS)
-    de = _stop_hits(text_col, DE_STOPWORDS)
-    return (
-        F.when((en >= es) & (en >= de) & (en > 0), F.lit("en"))
-        .when((es >= de) & (es > 0), F.lit("es"))
-        .when(de > 0, F.lit("de"))
-        .otherwise(F.lit("und"))
-    )
+    return lang_id_from(words_expr(text_col))
 
 
 def dedup_tokens_expr(text_col):

@@ -74,16 +74,17 @@ GOPHER_MIN_STOPWORDS = 2
 
 
 # ---------------------------------------------------------------------------
-# Spark-SQL string forms (r13 OPTIMIZATION). The Column-API versions of
-# these builders cost hundreds of py4j round-trips to CONSTRUCT (measured
-# ~1.3 s per web_gate_expr call at ~1.8 ms RTT in this sandbox — time the
-# bench charges to every query that gates); each builder below renders the
-# IDENTICAL expression as one SQL string parsed in a single call. Numeric
+# Spark-SQL builders: every rule below has exactly ONE Spark spelling,
+# rendered as SQL text and parsed in a single call (a Column-API tree
+# costs one py4j round-trip per node to construct — ~1.3 s per web gate
+# at ~1.8 ms RTT, r13 measurement). Column callers wrap the text in
+# ``F.expr``. Exception: `_words_sql` still mirrors
+# functions/text.words_expr, which keeps its Column callers. Numeric
 # literal discipline: Spark SQL parses `6.0` as DECIMAL(2,1), so every
-# fractional literal carries the `D` (double) suffix to reproduce the
-# Column form's double arithmetic bit-for-bit. The DuckDB mirrors live in
-# plans/curation.py (_SQL_LINES / _SQL_C4_KEEP / _SQL_GOPHER_M) — change
-# one, change both.
+# fractional literal carries the `D` (double) suffix to keep the
+# arithmetic double. The DuckDB mirrors (the oracles) live in
+# plans/curation.py (_SQL_LINES / _SQL_C4_KEEP / _SQL_GOPHER_M) —
+# change one, change both.
 # ---------------------------------------------------------------------------
 
 
@@ -108,7 +109,11 @@ def _lines_sql(ws: str) -> str:
 
 
 def _c4_keep_sql(line: str) -> str:
-    """c4_line_keep_expr over a line expression, as SQL text."""
+    """C4 §2.2 line-retention predicate over one derived line, as SQL
+    text. Retained iff the line ends in terminal punctuation, carries
+    at least C4_MIN_LINE_WORDS alphabetic words (the bullet dash is not
+    a word), and contains none of the boilerplate markers
+    ("javascript", "lorem ipsum", a curly brace)."""
     return (
         f"({line} RLIKE '[.!?]$'"
         f" AND size(filter(split({line}, ' '),"
@@ -127,7 +132,10 @@ def _sql_round(expr: str, digits: int = 2) -> str:
 
 
 def _gopher_metrics_sql(ws: str, lns: str) -> dict[str, str]:
-    """_gopher_metrics as SQL text over word/line array expressions."""
+    """The Gopher rule metrics as SQL text over word/line array
+    expressions — ONE definition shared by gopher_gate (which emits
+    them as output columns) and web_gate_sql (which folds them straight
+    into the verdict), so the two can never drift."""
     r = f"concat_ws('\\n', {lns})"
     n_words = f"size({ws})"
     n_lines = f"greatest(size({lns}), 1)"
@@ -168,9 +176,10 @@ def _gopher_metrics_sql(ws: str, lns: str) -> dict[str, str]:
     }
 
 
-def _gopher_keep_sql(ws: str, lns: str) -> str:
-    """gopher_keep_expr as SQL text (same metric definitions)."""
-    m = _gopher_metrics_sql(ws, lns)
+def _gopher_keep_sql(m: dict[str, str]) -> str:
+    """The Gopher keep verdict as SQL text over a metric dict: the
+    ``_gopher_metrics_sql`` expressions, or the names of columns that
+    already hold them."""
     return (
         f"({m['n_words']} >= {GOPHER_MIN_WORDS}"
         f" AND {m['n_words']} <= {GOPHER_MAX_WORDS}"
@@ -185,24 +194,24 @@ def _gopher_keep_sql(ws: str, lns: str) -> str:
 
 
 def web_gate_sql(text_col: str) -> str:
-    """web_gate_expr as ONE SQL string: the word/line arrays are built
-    once into a one-element struct array and every rule reads the
-    lambda variable, so predicate pushdown cannot re-inline the
-    derivation per reference (same structure as the Column form)."""
+    """C4 page keep AND Gopher keep as ONE SQL string: the word/line
+    arrays are built once into a one-element struct array and every
+    rule reads the lambda variable, so predicate pushdown cannot
+    re-inline the derivation per reference (see web_gate_expr)."""
     ws = _words_sql(text_col)
     lns = _lines_sql(ws)
     page = (
         f"size(filter(s.lns, l -> {_c4_keep_sql('l')}))"
         f" >= {C4_MIN_KEPT_LINES}"
     )
-    keep = _gopher_keep_sql("s.ws", "s.lns")
+    keep = _gopher_keep_sql(_gopher_metrics_sql("s.ws", "s.lns"))
     return (
         f"element_at(transform(array(struct({ws} AS ws, {lns} AS lns)),"
         f" s -> ({page}) AND {keep}), 1)"
     )
 
 
-def derived_lines_expr(text_col) -> Column:
+def derived_lines_expr(text_col: str) -> Column:
     """Deterministic multi-line rendering of a document.
 
     Regroups the lowercased whitespace words into LINE_WORDS-word
@@ -210,46 +219,8 @@ def derived_lines_expr(text_col) -> Column:
     (bullet prefix, boilerplate token, ellipsis / period / bare
     terminal) so every downstream line rule has real positive and
     negative rows. Pure JVM expressions, map-only; identical
-    derivation lives in plans/curation._SQL_LINES. Accepts a column
-    NAME (preferred — single-parse SQL construction) or a plain
-    attribute Column."""
-    return F.expr(_lines_sql(_words_sql(_col_name(text_col))))
-
-
-def _col_name(col) -> str:
-    """The attribute name behind a plain column reference; pass-through
-    for strings. The SQL-string builders need a NAME to splice into
-    the expression text — a derived Column has no stable SQL form and
-    is rejected loudly."""
-    if isinstance(col, str):
-        return col
-    name = col._jc.toString()
-    if not name.replace("_", "").isalnum():
-        raise ValueError(
-            f"expected a plain column reference, got {name!r}; pass the "
-            "column name instead"
-        )
-    return name
-
-
-def c4_line_keep_expr(line: Column) -> Column:
-    """C4 §2.2 line-retention predicate over one derived line.
-
-    Retained iff the line ends in terminal punctuation, carries at
-    least C4_MIN_LINE_WORDS alphabetic words (the bullet dash is not a
-    word), and contains none of the boilerplate markers ("javascript",
-    "lorem ipsum", a curly brace).
-    """
-    n_words = F.size(
-        F.filter(F.split(line, " "), lambda t: t.rlike("[a-z]"))
-    )
-    return (
-        line.rlike("[.!?]$")
-        & (n_words >= C4_MIN_LINE_WORDS)
-        & ~line.contains("javascript")
-        & ~line.contains("lorem ipsum")
-        & ~line.contains("{")
-    )
+    derivation lives in plans/curation._SQL_LINES."""
+    return F.expr(_lines_sql(_words_sql(text_col)))
 
 
 def kept_lines_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -715,86 +686,7 @@ def c4_clean(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def c4_page_keep_expr(lns: Column) -> Column:
-    """C4's page-keep gate over a staged derived-lines column: at
-    least C4_MIN_KEPT_LINES retained lines ("pages with fewer than 3
-    sentences were removed"). Shared by c4_clean's summary and the
-    pipeline_web_curation composition."""
-    return F.size(F.filter(lns, c4_line_keep_expr)) >= C4_MIN_KEPT_LINES
-
-
-def _gopher_metrics(ws: Column, lines: Column) -> dict[str, Column]:
-    """The Gopher rule metrics from staged word/line array columns —
-    ONE definition shared by gopher_gate (which emits them as output
-    columns) and gopher_keep_expr (which folds them straight into the
-    verdict), so the two can never drift."""
-    rendered = F.concat_ws("\n", lines)
-    n_words = F.size(ws)
-    n_lines = F.greatest(F.size(lines), F.lit(1))
-    n_hash = F.length(rendered) - F.length(F.replace(rendered, F.lit("#")))
-    n_ellipsis = (
-        F.length(rendered) - F.length(F.replace(rendered, F.lit("...")))
-    ) / F.lit(3)
-    stops = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-    return {
-        "n_words": n_words,
-        "mean_word_len": round_det(
-            F.aggregate(
-                ws, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-            )
-            / F.greatest(n_words, F.lit(1)).cast("double"),
-            4,
-        ),
-        "symbol_ratio": round_det(
-            (n_hash + n_ellipsis)
-            / F.greatest(n_words, F.lit(1)).cast("double"),
-            4,
-        ),
-        "bullet_frac": round_det(
-            F.size(F.filter(lines, lambda l: l.startswith("- ")))
-            / n_lines.cast("double"),
-            4,
-        ),
-        "ellipsis_frac": round_det(
-            F.size(F.filter(lines, lambda l: l.endswith("...")))
-            / n_lines.cast("double"),
-            4,
-        ),
-        "alpha_frac": round_det(
-            F.size(F.filter(ws, lambda x: x.rlike("[a-z]")))
-            / F.greatest(n_words, F.lit(1)).cast("double"),
-            4,
-        ),
-        "n_stop_distinct": F.size(
-            F.array_distinct(
-                F.filter(ws, lambda x: F.array_contains(stops, x))
-            )
-        ),
-    }
-
-
-def _gopher_keep_from(m: dict[str, Column]) -> Column:
-    return (
-        (m["n_words"] >= GOPHER_MIN_WORDS)
-        & (m["n_words"] <= GOPHER_MAX_WORDS)
-        & (m["mean_word_len"] >= GOPHER_MIN_MEAN_WORD_LEN)
-        & (m["mean_word_len"] <= GOPHER_MAX_MEAN_WORD_LEN)
-        & (m["symbol_ratio"] <= GOPHER_MAX_SYMBOL_RATIO)
-        & (m["bullet_frac"] <= GOPHER_MAX_BULLET_FRAC)
-        & (m["ellipsis_frac"] <= GOPHER_MAX_ELLIPSIS_FRAC)
-        & (m["alpha_frac"] >= GOPHER_MIN_ALPHA_FRAC)
-        & (m["n_stop_distinct"] >= GOPHER_MIN_STOPWORDS)
-    )
-
-
-def gopher_keep_expr(ws: Column, lines: Column) -> Column:
-    """The Gopher keep verdict as one expression over staged word/line
-    array columns (for compositions that only gate, never emit the
-    metrics). Identical rounded metrics to gopher_gate."""
-    return _gopher_keep_from(_gopher_metrics(ws, lines))
-
-
-def web_gate_expr(text_col) -> Column:
+def web_gate_expr(text_col: str) -> Column:
     """C4 page keep AND Gopher keep as ONE pushdown-proof expression.
 
     A projection-staged alias is NOT enough under a filter: Catalyst's
@@ -804,11 +696,10 @@ def web_gate_expr(text_col) -> Column:
     cut). Here the word/line arrays are built once into a one-element
     struct array and every metric reads the LAMBDA VARIABLE — a bound
     variable cannot be inlined, so the arrays derive exactly once per
-    row no matter where the optimizer moves the predicate. Accepts a
-    column NAME or a plain attribute Column; constructed as one parsed
-    SQL string (``web_gate_sql``) — the Column form cost ~1.3 s of
-    py4j chatter per call (r13 measurement)."""
-    return F.expr(web_gate_sql(_col_name(text_col)))
+    row no matter where the optimizer moves the predicate. Takes a
+    column NAME; constructed as one parsed SQL string
+    (``web_gate_sql``)."""
+    return F.expr(web_gate_sql(text_col))
 
 
 def gopher_gate(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -840,7 +731,7 @@ def gopher_gate(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             "ellipsis_frac", "alpha_frac", "n_stop_distinct",
         )],
     )
-    keep = _gopher_keep_from({name: F.col(name) for name in m})
+    keep = F.expr(_gopher_keep_sql({name: name for name in m}))
     return out.select("*", keep.alias("keep"))
 
 

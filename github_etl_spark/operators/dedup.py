@@ -55,28 +55,15 @@ def fingerprint_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _shingles(text_col, n: int = 3):
-    """Word n-gram shingles as a distinct array column.
-
-    Documents shorter than n tokens yield an EMPTY shingle set (matches
-    the oracle's range() semantics) rather than a padded partial gram.
-    Built from n zipped slices of the token array — O(n·L) per row; the
-    `transform(sequence, i -> slice(toks, i, n))` form is O(L²)
-    (measured 5× slower on the sf0.1 corpus, see operators/pipeline.py).
-    """
-    from .pipeline import ngrams_expr
-
-    return F.array_distinct(ngrams_expr(tokens_expr(text_col), n))
-
-
 # ---------------------------------------------------------------------------
-# Spark-SQL string twins (r13 OPTIMIZATION). The Column-API builders above
-# construct their trees through py4j one call at a time (~1.8 ms RTT in
-# this sandbox); `minhash_lsh_candidates` alone cost ~1.0-1.6 s per CALL
-# to construct — over half of dedup_minhash_lsh's total bench time. Each
-# builder below renders the IDENTICAL expression tree as one SQL string
-# parsed in a single call. The DuckDB oracle mirrors live in plans/ext.py;
-# change one, change both.
+# Spark-SQL builders: each rule has ONE Spark spelling, rendered as SQL
+# text and parsed in a single call (a Column-API tree costs one py4j
+# round-trip per node to construct; `minhash_lsh_candidates` cost
+# ~1.0-1.6 s per CALL that way in r13, over half of dedup_minhash_lsh's
+# bench time). Column callers wrap the text in ``F.expr``. Exception:
+# `_tokens_sql` still mirrors functions/text.dedup_tokens_expr, which
+# keeps its Column callers. The DuckDB oracle mirrors live in
+# plans/ext.py; change one, change both.
 # ---------------------------------------------------------------------------
 
 
@@ -86,8 +73,14 @@ def _tokens_sql(col: str) -> str:
 
 
 def _shingles_sql(col: str, n: int) -> str:
-    """_shingles (distinct word n-grams) as Spark SQL text — the same
-    zipped-slice construction, O(n·L) per row."""
+    """Word n-gram shingles (distinct) as Spark SQL text.
+
+    Documents shorter than n tokens yield an EMPTY shingle set (matches
+    the oracle's range() semantics) rather than a padded partial gram.
+    Built from n zipped slices of the token array — O(n·L) per row; the
+    `transform(sequence, i -> slice(toks, i, n))` form is O(L²)
+    (measured 5× slower on the sf0.1 corpus, see operators/pipeline.py).
+    """
     toks = _tokens_sql(col)
     ng = f"(size({toks}) - {n - 1})"
     out = f"slice({toks}, 1, {ng})"
@@ -305,23 +298,16 @@ def minhash_lsh_candidates(
     )
 
 
-def signature_agreement_expr(sig_a, sig_b, num_hashes: int):
-    """Estimated jaccard = fraction of agreeing minhash positions.
-    Exact k/num_hashes ratios (binary fractions for power-of-two
-    num_hashes), so threshold comparisons replay exactly in SQL.
-    Accepts column NAMES (single-parse SQL construction) or Columns."""
-    if isinstance(sig_a, str) and isinstance(sig_b, str):
-        return F.expr(
-            f"size(filter(zip_with({sig_a}, {sig_b},"
-            " (x, y) -> CAST(x = y AS INT)), v -> v = 1))"
-            f" / CAST({num_hashes} AS DOUBLE)"
-        )
-    return F.size(
-        F.filter(
-            F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    ) / F.lit(float(num_hashes))
+def signature_agreement_expr(sig_a: str, sig_b: str, num_hashes: int):
+    """Estimated jaccard = fraction of agreeing minhash positions over
+    two signature column NAMES. Exact k/num_hashes ratios (binary
+    fractions for power-of-two num_hashes), so threshold comparisons
+    replay exactly in SQL."""
+    return F.expr(
+        f"size(filter(zip_with({sig_a}, {sig_b},"
+        " (x, y) -> CAST(x = y AS INT)), v -> v = 1))"
+        f" / CAST({num_hashes} AS DOUBLE)"
+    )
 
 
 def simhash_signatures(
@@ -446,9 +432,10 @@ def ngram_jaccard_pairs(
     survives executor loss (unlike persist/localCheckpoint blocks).
     ``tokens_path`` takes precedence over ``persist``.
     """
-    grams = _shingles(F.col(text_col), shingle) if shingle > 1 else F.array_distinct(
-        tokens_expr(F.col(text_col))
-    )
+    if shingle > 1:
+        grams = F.expr(_shingles_sql(text_col, shingle))
+    else:
+        grams = F.array_distinct(tokens_expr(F.col(text_col)))
     df = ensure_parallelism(df)
     toks = df.select(
         F.col(id_col),

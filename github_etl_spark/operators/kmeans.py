@@ -8,8 +8,8 @@ bounded sample (similarity.train_ivf_centroids — the FAISS recipe);
 this operator runs Lloyd iterations over the FULL corpus with the
 classic "small model, big data" Spark shape:
 
-- the model (k × dim integers) lives on the driver and is inlined into
-  the assignment expression as literals — NO join, NO broadcast frame;
+- the model (k × dim integers) lives on the driver and ships inside
+  the Arrow assignment kernel's closure — NO join, NO broadcast frame;
 - each iteration is ONE corpus scan: a map-only argmin assignment into
   a groupBy(cell) with per-dimension partial (map-side) sums, so the
   shuffle per iteration is k·(dim+1) longs per map partition — bytes,
@@ -45,18 +45,6 @@ from pyspark.sql import functions as F
 from ..session import eager_checkpoint
 from .partitioning import ensure_parallelism
 from .similarity import quantize_expr
-
-# Assignment representation switch (same idea as similarity.
-# _ARROW_ASSIGN_CELLS): the inlined-literal expression form is used at
-# or below this many cells, the Arrow int64 matmul above it (identical
-# values, tested). r13 OPTIMIZATION: default 0 — always the Arrow
-# matmul. The expression form inlines the centroids as literals, so
-# EVERY Lloyd iteration generates (and whole-stage-compiles) a fresh
-# O(k·dim) codegen unit; the matmul kernel is literal-free Python and
-# pays only the Arrow batch crossing (guide §4.2). Measured at sf0.1,
-# k=8/dim=64/iters=3: 4.9 s → 3.4 s warm, bit-identical output.
-_ARROW_ASSIGN_CELLS = 0
-
 
 def _sq_dist_rank_expr(qv, centroids: list[list[int]]):
     """array<struct<d:long, cell:int>> sorted ascending — cells ranked
@@ -112,20 +100,24 @@ def _sq_assign_arrow(qv, centroids: list[list[int]]):
 
 
 def _assignment(qv, centroids: list[list[int]]):
-    """struct<d, cell> for the nearest centroid, auto-switching
-    representation exactly like similarity._top_cell_expr."""
+    """struct<d, cell> for the nearest centroid via the Arrow matmul.
+
+    Always Arrow, unlike similarity._top_cell_expr's size switch: the
+    inlined-literal expression form (``_sq_dist_rank_expr``) makes
+    EVERY Lloyd iteration generate and whole-stage-compile a fresh
+    O(k·dim) codegen unit, while the matmul kernel is literal-free and
+    pays only the Arrow batch crossing. Measured at sf0.1,
+    k=8/dim=64/iters=3: 4.9 s → 3.4 s warm, bit-identical output
+    (r13)."""
     k = len(centroids)
-    if k > _ARROW_ASSIGN_CELLS:
-        packed = _sq_assign_arrow(qv, centroids)
-        cell = F.pmod(packed, F.lit(k))
-        return F.struct(
-            # (packed - cell) is an exact multiple of k and ≪ 2⁵³, so
-            # the double division is exact
-            ((packed - cell) / k).cast("long").alias("d"),
-            cell.cast("int").alias("cell"),
-        )
-    r = _sq_dist_rank_expr(qv, centroids)[0]
-    return F.struct(r["d"].alias("d"), r["cell"].alias("cell"))
+    packed = _sq_assign_arrow(qv, centroids)
+    cell = F.pmod(packed, F.lit(k))
+    return F.struct(
+        # (packed - cell) is an exact multiple of k and ≪ 2⁵³, so
+        # the double division is exact
+        ((packed - cell) / k).cast("long").alias("d"),
+        cell.cast("int").alias("cell"),
+    )
 
 
 def _floordiv(s: int, n: int) -> int:

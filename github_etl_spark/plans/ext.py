@@ -4587,7 +4587,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame broadcast downstream — the pair list, the pair-doc shingle
     sizes — is pair-bounded too, never corpus-bounded) — never
     all-pairs."""
-    from ..operators.dedup import _shingles, minhash_lsh_candidates
+    from ..operators.dedup import _shingles_sql, minhash_lsh_candidates
 
     t = load_tables(spark, sf_dir)
     docs = t["documents"]
@@ -4607,7 +4607,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     sh = docs.select(
-        "doc_id", F.explode(_shingles(F.col("text"), 3)).alias("s")
+        "doc_id", F.explode(F.expr(_shingles_sql("text", 3))).alias("s")
     )
     # Shingles of PAIR DOCS only: the corpus-wide shingle frame is
     # map-only to recompute, but anything grouped/broadcast from here
@@ -5620,6 +5620,10 @@ def _lloyd_topk_frame(emb: DataFrame, iters: int) -> DataFrame:
     )
 
     cents, q = lloyd_centroids(emb, k=8, iters=iters)
+    if not cents:  # empty corpus: no model to assign against
+        return emb.sparkSession.createDataFrame(
+            [], "query_id long, neighbor_id long, rank int, cosine double"
+        )
     l2_of = lambda col: F.aggregate(  # noqa: E731
         col, F.lit(0).cast("long"), lambda a, x: a + x * x
     )

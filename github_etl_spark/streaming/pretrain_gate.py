@@ -126,7 +126,7 @@ def make_pretrain_gate(
         _read_span_meta(spark, span_store_path)
         batch_df.persist()
         try:
-            gated = batch_df.where(web_gate_expr(F.col(text_col)))
+            gated = batch_df.where(web_gate_expr(text_col))
             gated.persist()
             try:
                 fp = dedup_index_check(
@@ -266,7 +266,7 @@ def pretrain_fold_verdicts(
     outs: list[DataFrame] = []
     corpus = seed.select(id_col, text_col)
     for tag, b in batches:
-        gated = b.where(web_gate_expr(F.col(text_col)))
+        gated = b.where(web_gate_expr(text_col))
         fp = incremental_dedup_verdicts(
             corpus, gated, text_col, id_col,
             threshold=threshold, hash_family=hash_family,

@@ -81,7 +81,7 @@ def make_vector_gate(
             )
         batch_df.persist()
         try:
-            keep = batch_df.where(web_gate_expr(F.col(text_col)))
+            keep = batch_df.where(web_gate_expr(text_col))
             # Two consumers (summary assignment + index append) of the
             # encoder output → materialize once; batch-sized.
             vecs = eager_checkpoint(embed_text_vec(keep, text_col, id_col))
@@ -194,7 +194,7 @@ def vector_fold_verdicts(
     spark = docs.sparkSession
     seed = docs.where(
         (F.pmod(F.col(id_col), F.lit(4)) == 0)
-        & web_gate_expr(F.col(text_col))
+        & web_gate_expr(text_col)
     )
     sv = eager_checkpoint(embed_text_vec(seed, text_col, id_col))
     cents = portable_vector_seeds(sv, id_col, "vec", n_centroids)
@@ -202,13 +202,13 @@ def vector_fold_verdicts(
     if not cents:
         return spark.createDataFrame([], empty)
     ing = docs.where(F.pmod(F.col(id_col), F.lit(4)).isin([1, 2, 3]))
-    kept = ing.where(web_gate_expr(F.col(text_col)))
+    kept = ing.where(web_gate_expr(text_col))
     kv = eager_checkpoint(embed_text_vec(kept, text_col, id_col))
     assigned = kv.select(
         F.pmod(F.col(id_col), F.lit(4)).cast("long").alias("ingest_batch"),
         _int_cell_rank_expr(F.col("vec"), cents)[0]["cell"].alias("cell"),
     )
-    rej = ing.where(~web_gate_expr(F.col(text_col))).select(
+    rej = ing.where(~web_gate_expr(text_col)).select(
         F.pmod(F.col(id_col), F.lit(4)).cast("long").alias("ingest_batch"),
         F.lit(REJECTED_CELL).cast("int").alias("cell"),
     )

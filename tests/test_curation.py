@@ -10,8 +10,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 from github_etl_spark.operators.curation import (
     BOILER_MOD,
     BULLET_MOD,
@@ -55,7 +53,7 @@ def test_derived_lines_match_scalar_replica(spark):
     got = {
         r.doc_id: r.lns
         for r in df.select(
-            "doc_id", derived_lines_expr(F.col("text")).alias("lns")
+            "doc_id", derived_lines_expr("text").alias("lns")
         ).collect()
     }
     assert got[0] == _expected_lines(words)

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from github_etl_spark.operators.dedup import (
-    _shingles,
+    _shingles_sql,
     hamming_distance,
     minhash_lsh_candidates,
     minhash_signatures,
@@ -49,7 +49,9 @@ def _docs(spark):
 
 
 def _true_jaccard(spark, df, a, b, shingle=3):
-    sh = df.select("doc_id", _shingles(F.col("text"), shingle).alias("sh"))
+    sh = df.select(
+        "doc_id", F.expr(_shingles_sql("text", shingle)).alias("sh")
+    )
     rows = {r.doc_id: set(r.sh) for r in sh.collect()}
     inter = len(rows[a] & rows[b])
     union = len(rows[a] | rows[b])

@@ -3,10 +3,10 @@
 The oracle replay itself is pinned by the driver contract
 (kmeans_lloyd_stats vs the generated unrolled-SQL oracle); these tests
 pin the engine-internal contracts the oracle can't see: the
-expression-vs-Arrow assignment parity (the representation switch at
-the 64-cell cliff), determinism across runs, the partition-of-corpus
-invariant, the integer-lattice mean formula, and the empty-input
-shape.
+expression-vs-Arrow assignment parity (the IVF probe path ranks cells
+with the expression form, Lloyd assigns with Arrow), determinism
+across runs, the partition-of-corpus invariant, the integer-lattice
+mean formula, and the empty-input shape.
 """
 
 from __future__ import annotations
@@ -48,12 +48,15 @@ def test_deterministic_across_runs(spark, emb):
 
 
 def test_arrow_assignment_parity(spark, emb, monkeypatch):
-    """Force the inlined-expression form and assert the WHOLE fixed
-    point (trajectory, not just one assignment) is bit-identical to
-    the Arrow matmul form (the r13 default, _ARROW_ASSIGN_CELLS=0) —
-    same contract similarity's _top_cell_expr switch carries."""
+    """Swap the Arrow matmul assignment for the inlined-expression
+    ranking (``_sq_dist_rank_expr(...)[0]``, the form the IVF probe
+    path reads) and assert the WHOLE fixed point (trajectory, not just
+    one assignment) is bit-identical — same contract similarity's
+    _top_cell_expr switch carries."""
     arrow = sorted(map(tuple, kmeans_cell_stats(emb, k=6, iters=2).collect()))
-    monkeypatch.setattr(km, "_ARROW_ASSIGN_CELLS", 1_000_000)
+    monkeypatch.setattr(
+        km, "_assignment", lambda qv, cents: km._sq_dist_rank_expr(qv, cents)[0]
+    )
     expr = sorted(map(tuple, kmeans_cell_stats(emb, k=6, iters=2).collect()))
     assert expr == arrow
 

@@ -159,12 +159,13 @@ def test_winnow_shared_run_guarantee(spark):
 
 
 def test_staged_score_forms_match_expr_forms(spark):
-    """quality_score_from / lang_id_from (the bound-word-array staged
-    forms) must produce columns IDENTICAL to quality_score_expr /
-    lang_id_expr over an edge-case corpus — three hand-maintained
-    copies of the scoring arithmetic exist (the _expr form, the _from
-    form, the DuckDB oracle SQL) and any future edit to one must not
-    silently desynchronize the others (ADVICE r13)."""
+    """quality_score_from / lang_id_from over a LAMBDA-BOUND word array
+    (the staging the query paths use to stop predicate pushdown from
+    re-inlining the split) must produce columns IDENTICAL to
+    quality_score_expr / lang_id_expr, which pass the inline word
+    array, over an edge-case corpus. NULL text reaches the bound form
+    as a NULL array element, empty and whitespace-only text as an
+    empty one."""
     from github_etl_spark.functions.text import (
         lang_id_expr,
         lang_id_from,

@@ -40,7 +40,7 @@ def _build_seed_index(spark, docs, index):
     live ≡ fold pin."""
     seed = docs.where(
         (F.pmod(F.col("doc_id"), F.lit(4)) == 0)
-        & web_gate_expr(F.col("text"))
+        & web_gate_expr("text")
     )
     sv = embed_text_vec(seed, "text", "doc_id")
     cents = portable_vector_seeds(sv, "doc_id", "vec", 8)
